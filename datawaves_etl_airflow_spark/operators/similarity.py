@@ -1,11 +1,28 @@
 """Embedding similarity search: brute-force cosine top-k (exact
-baseline), random-hyperplane LSH bucketing, and an IVF (inverted-file)
-index — the three standard ANN tiers.
+baseline), random-hyperplane LSH bucketing, an IVF (inverted-file)
+index, and the SemDeDup / prototype-outlier curation operators built
+on the same cells.
 
-Vectors are ``array<float>`` columns. All arithmetic runs JVM-side via
-higher-order functions (``zip_with``/``aggregate``) in double precision
-— left-to-right accumulation, so results are deterministic and
-reproducible by any engine that sums the same way.
+Vectors are ``array<float>`` or ``array<double>`` columns; all
+arithmetic is double precision. Two arithmetic surfaces exist:
+
+- Cell assignment (k-means training, IVF build/append/search,
+  semantic dedup, streaming ingest, ``cell_outliers``) has ONE
+  implementation, :func:`_assign_cells`: a NumPy argmax in an Arrow
+  batch. Its rule: similarity is ``dot / (‖v‖·‖c‖)`` in float64, ties
+  go to the smaller centroid id, a NULL vector gets a NULL cell, NULL
+  centroid rows never win, and an empty centroid set gives NULL cells.
+  The SemDeDup pair stage (:func:`_cell_pairs_blas`) is a BLAS Gram
+  product in the same worker style.
+- Everything else (query scoring, LSH signatures, normalization,
+  decontamination) runs JVM-side through higher-order functions
+  (``zip_with``/``aggregate``) with left-to-right accumulation.
+
+The two sum in different orders, so they can disagree by ~1e-15.
+Every DuckDB oracle over these operators compares at margins orders
+of magnitude wider than that (argmax gaps, pair thresholds and keep
+rules are measured per query in its docstring), so the drift between
+the NumPy and the sequential fold never flips a compared value.
 
 Scale posture: brute force is O(n·q) — correct for reranking a
 candidate set or small q; the LSH variant buckets by sign-pattern over
@@ -15,12 +32,11 @@ partitions the corpus into ``n_centroids`` spherical-k-means cells and
 each query scores only its ``nprobe`` nearest cells — the shuffle key
 is the centroid id, candidate volume is ``nprobe/n_centroids`` of the
 corpus, and recall/cost is tunable per query batch. At 100 TB the
-centroid set stays tiny (≤ a few thousand rows, always broadcast), the
-index build is one crossJoin-against-broadcast + hash aggregation per
-Lloyd iteration, and nothing ever shuffles the corpus by anything
-other than its cell id.
+centroid set stays tiny (≤ a few thousand rows, collected to the
+driver and shipped to every task), the index build is one map-side
+assignment pass + hash aggregation per Lloyd iteration, and nothing
+ever shuffles the corpus by anything other than its cell id.
 """
-
 from __future__ import annotations
 
 import random
@@ -67,8 +83,7 @@ def brute_force_topk(
     """
     # project to (query_id, id, cosine) BEFORE the ranking window: the
     # window's exchange otherwise carries both dense vectors per scored
-    # row — ~40× the bytes the ranking needs (guide §2.3: project
-    # before the exchange). r13 opt round; values unchanged.
+    # row — ~40× the bytes the ranking needs.
     joined = (
         F.broadcast(queries)
         .crossJoin(vectors)
@@ -119,9 +134,9 @@ def knn_label_predict(
     sampled query set, or use `knn_label_predict_index` (candidates
     from a persisted IVF index, scan bounded by partition pruning).
     """
-    # narrow projection before the ranking window (r13 opt round —
-    # same §2.3 fix as `brute_force_topk`: the exchange needs ids,
-    # labels and the score, never the dense vectors)
+    # narrow projection before the ranking window (as in
+    # `brute_force_topk`: the exchange needs ids, labels and the
+    # score, never the dense vectors)
     joined = (
         F.broadcast(queries).crossJoin(vectors)
         .filter(F.col("query_id") != F.col(id_col))
@@ -384,8 +399,8 @@ def neardup_pairs_banded(
             "band_id", "band_hash"
         ),
     )
-    # candidate generation via per-bucket pair emission (r13 opt
-    # round, `dedup.bucket_pairs`): one exchange on the band key and
+    # candidate generation via per-bucket pair emission
+    # (`dedup.bucket_pairs`): one exchange on the band key and
     # ONE evaluation of the sign-matmul UDF, vs the band-key self-join
     # that evaluated the ArrowEvalPython signature UDF once per join
     # side; the max_docs_per_band valve becomes the bucket-size cap —
@@ -413,84 +428,128 @@ def neardup_pairs_banded(
     )
 
 
-def _assign_cells_np(
-    norm: DataFrame, vcol: str, centroids: DataFrame
+def _assign_cells(
+    norm: DataFrame,
+    vcol: str,
+    centroids: DataFrame,
+    coarse: DataFrame | None = None,
 ) -> DataFrame:
-    """semantic_dedup's flat-path cell assignment as one NumPy pass:
-    ``(_vid, _v)`` → ``(_vid, _v, centroid_id, _csim)`` with
-    ``centroid_id`` the argmax-cosine cell (ties to the smaller
-    centroid id — the engine's one assignment rule, preserved by
-    sorting the centroid matrix by id so ``np.argmax``'s first-max
-    tie-break lands on the smaller id) and ``_csim`` that winning
-    similarity (the far_from_centroid keep policy's input, computed
-    here for free instead of a broadcast join + interpreted dot).
+    """The engine's one cell-assignment rule: every input column plus
+    ``centroid_id`` (the argmax-cosine cell of ``vcol``) and ``_csim``
+    (the winning similarity).
 
-    Why not :func:`_assign_cells`: the expression argmax runs the
-    zip_with/aggregate dot inside a ``transform`` lambda — higher-
-    order functions never reach whole-stage codegen, so every row
-    pays k interpreted dim-length folds (measured 2.15× slower than
-    the BLAS matmul at sf0.1's k=16, and the gap grows linearly with
-    k in the SemDeDup regime where k scales with the corpus). The
-    expression path stays the shared default for the ANN/IVF estate;
-    this variant is private to semantic_dedup, whose registered
-    oracles compare planted booleans with documented margins
-    (argmax gap ≥ 1.5e-7, keep-rule gap ≥ 1.2e-8, pair margins
-    ≥ 0.38) — orders of magnitude above the ~1e-15 float64
-    sum-association drift between BLAS and the sequential fold.
+    - Similarity is ``dot / (‖v‖·‖c‖)`` in float64, and 0 where either
+      norm is 0 (so a zero vector lands in the smallest-id cell with
+      ``_csim`` 0).
+    - Ties go to the smaller centroid id.
+    - A NULL vector gets a NULL cell and a NULL ``_csim``.
+    - Centroid rows with a NULL id or vector never win; an empty
+      centroid set gives NULL cells.
 
-    The centroid table is collected to the driver — bounded by k
-    (the train_bpe_merges bounded-collect pattern; k is thousands at
-    most, and semantic_dedup's CC stage already executes eagerly), so
-    this adds one tiny job, not a corpus collect. Preconditions
-    (met by semantic_dedup's call site): ``norm`` has no NULL
-    vectors, centroid vectors are non-NULL and unit-norm.
+    ``centroids`` is ``(centroid_id, centroid)``. Given ``coarse``
+    (``(centroid_id, centroid)``), ``centroids`` is the fine table
+    ``(centroid_id, coarse_id, centroid)`` and the argmax is two-level:
+    first over the coarse table, then over only the winning coarse
+    cell's fine rows — O(√k + √k) dots per row instead of k, the
+    inverted-multi-index shape (Babenko & Lempitsky, CVPR 2012) that
+    FAISS uses for billion-scale IVF. A row whose coarse cell has no
+    fine rows gets a NULL cell.
+
+    Plan shape: the centroid tables are collected to the driver once
+    (bounded by k) and travel inside the ``mapInPandas`` closure; each
+    Arrow batch is one float64 product against the centroid matrix
+    plus ``np.argmax`` over the centroids sorted by id, whose first-max
+    tie-break is the smaller id. The product is ``np.einsum``, not a
+    BLAS matmul: BLAS tiles round the same (row, centroid) pair
+    differently depending on where it sits in the matrix, so identical
+    centroids would stop tying and exact-copy rows could split across
+    cells; einsum's value depends only on the two vectors. No shuffle
+    and no join, and the input columns ride along, so callers never
+    join the result back on the row id. The worker stays a closure so
+    it pickles by value: Python workers never import this package.
     """
-    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    id_t = norm.schema["_vid"].dataType.simpleString()
-    cid_t = (
-        centroids.schema["centroid_id"].dataType.simpleString()
-        if rows
-        else "int"
-    )
-    schema = (
-        f"_vid {id_t}, {vcol} array<double>, "
-        f"centroid_id {cid_t}, _csim double"
-    )
-    if not rows:
-        # mirror _assign_cells over an empty centroid set: every row
-        # keeps a NULL cell (downstream treats them as kept singletons)
+    def _table(df: DataFrame, *extra: str) -> list:
+        live = df.filter(
+            F.col("centroid_id").isNotNull() & F.col("centroid").isNotNull()
+        )
+        rows = live.select("centroid_id", "centroid", *extra).collect()
+        return sorted(rows, key=lambda r: r[0])
+
+    def _packed(rows: list) -> tuple:
+        m = np.array([list(r[1]) for r in rows], dtype=np.float64)
+        return (
+            np.array([r[0] for r in rows]),
+            m,
+            np.sqrt(np.einsum("ij,ij->i", m, m)),
+        )
+
+    cid_t = centroids.schema["centroid_id"].dataType
+    if coarse is None:
+        top, fine = _table(centroids), None
+    else:
+        top, by_cell = _table(coarse), {}
+        for r in _table(centroids, "coarse_id"):
+            by_cell.setdefault(r[2], []).append(r)
+        fine = {c: _packed(rows) for c, rows in by_cell.items()}
+    if not top or fine == {}:
         return norm.select(
-            "_vid",
-            F.col(vcol),
+            "*",
             F.lit(None).cast(cid_t).alias("centroid_id"),
             F.lit(None).cast("double").alias("_csim"),
         )
-    cent_ids = [r["centroid_id"] for r in rows]
-    cent_mat = [list(r["centroid"]) for r in rows]
+    top = _packed(top)
+    cell_t = (top if fine is None else next(iter(fine.values())))[0].dtype
 
-    def _assign(it):
+    def _assign(batches):
         import numpy as np
+        import pandas as pd
 
-        ids_c = np.array(cent_ids)
-        m = np.array(cent_mat, dtype=np.float64)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.array(pdf[vcol].to_list(), dtype=np.float64)
-            sims = v @ m.T
+        def argmax(v, nv, table):
+            ids, m, nc = table
+            dots = np.einsum("id,kd->ik", v, m)
+            den = nv[:, None] * nc[None, :]
+            sims = np.divide(
+                dots, den, out=np.zeros_like(dots), where=den > 0
+            )
             best = np.argmax(sims, axis=1)
-            yield pd.DataFrame(
-                {
-                    "_vid": pdf["_vid"].to_numpy(),
-                    vcol: pdf[vcol],
-                    "centroid_id": ids_c[best],
-                    "_csim": sims[np.arange(len(pdf)), best],
-                }
+            return ids[best], sims[np.arange(len(v)), best]
+
+        for pdf in batches:
+            n = len(pdf)
+            cell = np.zeros(n, dtype=cell_t)
+            csim = np.full(n, np.nan)
+            has = np.zeros(n, dtype=bool)
+            rows = np.flatnonzero(pdf[vcol].notna().to_numpy())
+            if rows.size:
+                v = np.array(pdf[vcol].iloc[rows].to_list(), dtype=np.float64)
+                nv = np.sqrt(np.einsum("ij,ij->i", v, v))
+                ids, sims = argmax(v, nv, top)
+                if fine is None:
+                    cell[rows], csim[rows], has[rows] = ids, sims, True
+                else:
+                    for c in np.unique(ids):
+                        if c in fine:
+                            sel = ids == c
+                            at = rows[sel]
+                            cell[at], csim[at] = argmax(
+                                v[sel], nv[sel], fine[c]
+                            )
+                            has[at] = True
+            yield pdf.assign(
+                centroid_id=pd.Series(cell, index=pdf.index).where(has),
+                _csim=csim,
             )
 
-    return norm.select("_vid", vcol).mapInPandas(_assign, schema=schema)
+    schema = StructType(
+        norm.schema.fields
+        + [
+            StructField("centroid_id", cid_t),
+            StructField("_csim", DoubleType()),
+        ]
+    )
+    return norm.mapInPandas(_assign, schema=schema)
 
 
 def _cell_pairs_blas(
@@ -505,36 +564,42 @@ def _cell_pairs_blas(
     per row-block, and only the surviving id pairs cross back to the
     JVM (the vectors never leave the Python worker).
 
-    Input contract: ``assigned`` carries ``centroid_id`` (non-NULL —
-    NULL-vector rows are filtered before assignment, and the 2-level
-    path drops NULL fine cells), ``_vid`` (orderable id) and ``_v``
+    Input contract: ``assigned`` carries ``centroid_id`` (NULL cells
+    take no part in pairing), ``_vid`` (orderable id) and ``_v``
     (unit-normalized array<double>). Emits each unordered pair once
-    (``id_a < id_b``); rows of a cell larger than ``max_cell_size``
-    emit nothing (the degenerate-cluster valve — same excluded-cell
-    semantics as the old windowed count, minus the window pass).
+    (``id_a < id_b``); the rows of a cell larger than
+    ``max_cell_size`` emit nothing (the degenerate-cluster valve).
 
-    Memory shape: one task holds one cell's vectors (n·dim doubles —
-    the valve bounds n) and computes the Gram in 2048-row blocks, so
-    the n² similarity matrix is never materialized whole; pair OUTPUT
-    is bounded by the true duplicate volume plus threshold leakage,
-    the same bound the join path had.
+    Memory shape: with ``max_cell_size`` set, a per-cell window count
+    drops over-cap cells in the JVM (spillable, sharing the sort the
+    grouped stage needs anyway) before any row reaches Python, so one
+    task holds at most ``max_cell_size`` vectors. Without it, one task
+    holds a whole cell's vectors (n·dim doubles, unbounded). Either way
+    the Gram is computed in 2048-row blocks, so the n² similarity
+    matrix is never materialized whole; pair OUTPUT is bounded by the
+    true duplicate volume plus threshold leakage.
     """
     import pandas as pd
 
     id_t = assigned.schema["_vid"].dataType.simpleString()
-    # NULL cells (empty centroid set, missing 2-level fine cells) take
-    # no part in pairing — the old equi-join dropped them implicitly
     src = assigned.select("centroid_id", "_vid", "_v").filter(
         F.col("centroid_id").isNotNull()
     )
+    if max_cell_size is not None:
+        src = (
+            src.withColumn(
+                "_n", F.count(F.lit(1)).over(Window.partitionBy("centroid_id"))
+            )
+            .filter(F.col("_n") <= int(max_cell_size))
+            .drop("_n")
+        )
     thr = float(threshold)
-    cap = None if max_cell_size is None else int(max_cell_size)
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         n = len(pdf)
-        if n < 2 or (cap is not None and n > cap):
+        if n < 2:
             return pd.DataFrame({"id_a": pdf["_vid"][:0], "id_b": pdf["_vid"][:0]})
         ids = pdf["_vid"].to_numpy()
         v = np.array(pdf["_v"].to_list(), dtype=np.float64)
@@ -603,11 +668,11 @@ def semantic_dedup(
     volume is sum(cell^2) ~= n^2 / n_centroids, so operating at a
     fixed cell size means scaling ``n_centroids`` linearly with the
     corpus (the paper's regime) and the pair stage stays linear in n.
-    Centroid training is broadcast-crossJoin + hash aggregation per
-    Lloyd iteration (:func:`train_centroids` — deterministic
-    hash-order seeding, no corpus shuffle); the component pass runs
-    over the pair graph, orders of magnitude smaller than the corpus
-    (:func:`~..operators.dedup.duplicate_clusters`).
+    Centroid training is one map-side assignment pass + hash
+    aggregation per Lloyd iteration (:func:`train_centroids` —
+    deterministic hash-order seeding, no corpus shuffle); the
+    component pass runs over the pair graph, orders of magnitude
+    smaller than the corpus (:func:`~..operators.dedup.duplicate_clusters`).
 
     ``max_cell_size`` is the degenerate-cluster skew valve (same
     contract as ``max_docs_per_band`` on the banded LSH paths): a
@@ -628,8 +693,8 @@ def semantic_dedup(
     Pass ``coarse_centroids`` ALONGSIDE ``centroids`` for the
     two-level quantizer (``centroids`` is then the fine table
     ``(centroid_id, coarse_id, centroid)`` from
-    :func:`train_centroids_2level`): assignment runs the hierarchical
-    argmax of :func:`_assign_cells_2level` — O(√k + √k) dots per row
+    :func:`train_centroids_2level`): assignment runs the two-level
+    argmax of :func:`_assign_cells` — O(√k + √k) dots per row
     instead of k, the operating point for the paper's regime once k
     scales past ~10³ with the corpus. Cell semantics downstream (pair
     stage, valve, keep policies) are identical; the fine centroid id
@@ -648,44 +713,24 @@ def semantic_dedup(
             "quantizer table from train_centroids_2level)"
         )
     ids_all = vectors.select(F.col(id_col).alias("_vid"))
-    valid = vectors.filter(F.col(vec_col).isNotNull())
-    norm = valid.select(
-        F.col(id_col).alias("_vid"), l2_normalize(F.col(vec_col)).alias("_v")
-    )
     if centroids is None:
         centroids = train_centroids(
-            valid, n_centroids, n_iters=n_iters,
+            vectors, n_centroids, n_iters=n_iters,
             vec_col=vec_col, id_col=id_col,
         )
-    # map-side assignment keeps _v — no join-back shuffle. Flat path
-    # (r14 opt round): NumPy argmax via _assign_cells_np, which also
-    # emits _csim so the far_from_centroid policy needs no broadcast
-    # join; the 2-level path keeps the hierarchical expression argmax.
-    if coarse_centroids is not None:
-        assigned = _assign_cells_2level(
-            norm, "_v", coarse_centroids, centroids
-        ).filter(F.col("centroid_id").isNotNull())
-    else:
-        assigned = _assign_cells_np(norm, "_v", centroids)
-    # within-cell pair stage (r14 opt round, guide §2.3/§4.2): ONE
-    # exchange of the corpus on its cell id + per-cell BLAS Gram
-    # matrices, replacing the a⋈b self-join on centroid_id (which
-    # shuffled the corpus WITH its vectors twice) and the per-pair
-    # interpreted zip_with/aggregate dot (higher-order functions never
-    # reach whole-stage codegen; measured 4.6 s for the 500k sf0.1
-    # candidate dots vs ~0.3 s for the per-cell matmul). The
-    # max_cell_size valve moves inside the pair emitter — len(cell) is
-    # in hand there, so the windowed per-cell count pass is gone too;
-    # an over-cap cell emits no pairs, and its rows surface as kept
-    # singletons through the ids_all left join exactly as before
-    # (excluded rows can never appear in `clusters`, so the
-    # far_from_centroid rep join prunes their cent_sim rows unread).
-    # Pair SET equality with the old expression path is pinned in
-    # tests/test_semantic_dedup.py: float64 BLAS vs left-to-right
-    # aggregate() drifts ~1e-15, orders of magnitude below every
-    # registered threshold margin (planted pairs ≥ 0.997 vs corpus
-    # cross-pairs ≤ 0.61 at thresholds 0.95–0.999 — measured per the
-    # query docstrings).
+    # one map-side pass, fed the raw vectors exactly as the IVF build
+    # feeds them, so a shared quantizer gives both the same cells; it
+    # emits _csim, the far_from_centroid policy's input. The pair
+    # stage is one exchange of the corpus on its cell id plus per-cell
+    # BLAS Gram blocks; NULL-vector rows (NULL cell) and over-cap cells
+    # emit no pairs, so their rows surface as kept singletons through
+    # the ids_all left join below.
+    assigned = _assign_cells(
+        vectors.select(F.col(id_col).alias("_vid"), vec_col),
+        vec_col,
+        centroids,
+        coarse_centroids,
+    ).withColumn("_v", l2_normalize(F.col(vec_col)))
     pairs = _cell_pairs_blas(assigned, threshold, max_cell_size)
     from .dedup import duplicate_clusters
 
@@ -697,21 +742,7 @@ def semantic_dedup(
             (F.col("id") == F.col("cluster_id")).alias("kept"),
         )
     else:
-        # similarity of each member to ITS cell centroid — the flat
-        # path's NumPy assignment already carries it (_csim); only the
-        # 2-level path still pays the broadcast join + interpreted dot
-        if coarse_centroids is None:
-            cent_sim = assigned.select(
-                F.col("_vid").alias("id"), F.col("_csim")
-            )
-        else:
-            cent_sim = (
-                assigned.join(F.broadcast(centroids), "centroid_id")
-                .select(
-                    F.col("_vid").alias("id"),
-                    dot(F.col("_v"), F.col("centroid")).alias("_csim"),
-                )
-            )
+        cent_sim = assigned.select(F.col("_vid").alias("id"), "_csim")
         reps = (
             clusters.join(cent_sim, "id")
             .groupBy("cluster_id")
@@ -776,16 +807,17 @@ def train_centroids(
 ) -> DataFrame:
     """Spherical k-means coarse quantizer → (centroid_id, centroid).
 
-    Deterministic throughout: seeds are the ``n_centroids`` corpus
-    vectors with the smallest ``xxhash64(id)`` (hash-order sampling —
-    no global sort of the corpus, and stable across runs/partitionings),
-    assignment ties break on centroid id, and the mean is computed
-    per-dimension with a hash aggregation. Each Lloyd iteration is one
-    broadcast crossJoin (corpus × tiny centroid set) + two hash
-    aggregations; the corpus is never shuffled by anything except in
-    the final assignment's ``groupBy`` — and that is map-side partial.
+    Deterministic throughout: seeds are the ``n_centroids`` non-NULL
+    corpus vectors with the smallest ``xxhash64(id)`` (hash-order
+    sampling — no global sort of the corpus, and stable across
+    runs/partitionings), assignment is :func:`_assign_cells` (ties on
+    the smaller centroid id), and the mean is computed per-dimension
+    with a hash aggregation. Each Lloyd iteration is one map-side
+    assignment pass + two hash aggregations; the corpus is never
+    shuffled by anything except the mean's ``groupBy`` — and that is
+    map-side partial. NULL vectors take no part in training.
     """
-    norm = vectors.select(
+    norm = vectors.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_vid"), l2_normalize(F.col(vec_col)).alias("_v")
     )
     # top-K-by-hash compiles to per-partition top-K + a driver merge of
@@ -811,19 +843,7 @@ def train_centroids(
         )
     )
     for _ in range(n_iters):
-        # r14 opt round: the Lloyd-iteration argmax goes through the
-        # NumPy assignment (see _assign_cells_np — the interpreted
-        # transform/zip_with argmax was the training hot spot, and k
-        # scales with the corpus in the SemDeDup regime). Assignment
-        # OUTCOMES are unchanged (same argmax/tie rule; pinned against
-        # _assign_cells in tests/test_semantic_dedup.py), so the mean
-        # aggregate below — fp-identical machinery — yields the same
-        # centroids. NULL-vector rows are excluded up front: the old
-        # path assigned them a NULL cell whose posexplode(NULL) emitted
-        # nothing, so they never contributed to a mean either way.
-        assigned = _assign_cells_np(
-            norm.filter(F.col("_v").isNotNull()), "_v", centroids
-        )
+        assigned = _assign_cells(norm.select("_v"), "_v", centroids)
         centroids = (
             assigned
             .select("centroid_id", F.posexplode("_v").alias("_pos", "_x"))
@@ -839,122 +859,11 @@ def train_centroids(
                 ).alias("centroid")
             )
         )
-        # re-normalize so dot == cosine stays true next iteration
+        # re-normalize: stored quantizers are unit-norm by contract
         centroids = centroids.select(
             "centroid_id", l2_normalize(F.col("centroid")).alias("centroid")
         )
     return centroids
-
-
-def _assign_cells(
-    norm: DataFrame, vcol: str, centroids: DataFrame
-) -> DataFrame:
-    """All input columns + ``centroid_id`` by max cosine on ``vcol``.
-
-    Zero-shuffle plan (the :func:`cell_outliers` pattern): the centroid
-    set folds to ONE broadcast array row, and the argmax is a map-side
-    ``transform`` + ``array_max`` in whole-stage codegen — one output
-    row per input row, no n×k row materialization, no ``groupBy`` on
-    the row id. The previous form (crossJoin → n·k rows → hash-agg
-    ``max_by``) shuffled n·k rows through the aggregate; with the
-    SemDeDup operating regime scaling ``n_centroids`` WITH the corpus
-    that stage was quadratic in rows moved — the factor-100 scalecheck
-    measured it at 156× the base time before this rewrite.
-
-    Because assignment is now a per-row projection, the input's other
-    columns ride along for free — callers must NOT join the result
-    back to the corpus on the row id (the old (_vid → centroid_id)
-    contract forced that join, two shuffle legs + a sort per call
-    site); carry whatever columns the downstream needs in ``norm``.
-
-    Tie rule unchanged and shared with :func:`cell_outliers`: struct
-    comparison on ``(sim, -centroid_id)`` picks max similarity, then
-    the SMALLER centroid id. Rows whose vector is NULL keep a NULL
-    ``centroid_id`` (same as the old all-NULL ``max_by``).
-    """
-    cents = centroids.agg(
-        F.collect_list(
-            F.struct(F.col("centroid_id"), F.col("centroid"))
-        ).alias("_cents")
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                dot(F.col(vcol), c["centroid"]).alias("s"),
-                (-c["centroid_id"]).alias("nid"),
-            ),
-        )
-    )
-    return (
-        norm.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_best", F.when(F.col(vcol).isNotNull(), best)
-        )
-        .withColumn("centroid_id", -F.col("_best.nid"))
-        .drop("_cents", "_best")
-    )
-
-
-def _assign_cells_2level(
-    norm: DataFrame, vcol: str, coarse: DataFrame, fine: DataFrame
-) -> DataFrame:
-    """All input columns + ``centroid_id`` via a TWO-LEVEL argmax:
-    coarse argmax over ``coarse`` (``(centroid_id, centroid)``), then
-    fine argmax over only the winning coarse cell's fine centroids
-    (``fine``: ``(centroid_id, coarse_id, centroid)``; fine centroid
-    ids are the global cell ids).
-
-    This is the inverted-multi-index / hierarchical-quantizer shape
-    (Babenko & Lempitsky, "The Inverted Multi-Index", CVPR 2012; the
-    same two-level coarse quantizer FAISS uses for billion-scale IVF):
-    flat assignment against k cells is O(n·k) dot products, and the
-    SemDeDup operating regime scales k WITH the corpus, so flat
-    assignment is quadratic in FLOPs even after the broadcast-argmax
-    rewrite killed the shuffle. Two balanced levels cost
-    O(n·(√k + √k)) — at k = 1600 that is 80 dots/row instead of 1600.
-
-    Plan shape: still ZERO corpus shuffles. Level 1 is
-    :func:`_assign_cells` (1-row broadcast fold + map-side argmax);
-    level 2 groups the fine table into one array<struct> row PER
-    coarse cell (a tiny shuffle of k fine centroids, never the
-    corpus), broadcast-hash-joins it on the coarse id, and runs the
-    same transform/array_max argmax over the ~√k-element array.
-
-    Tie rule at both levels: max similarity, then smaller centroid id
-    (the engine's one assignment rule). NULL vectors keep a NULL
-    ``centroid_id``; rows whose coarse cell has NO fine centroids
-    (possible only with hand-built fine tables — training seeds every
-    non-empty cell) also get NULL, the same kept-singleton contract.
-    """
-    c1 = _assign_cells(norm, vcol, coarse).withColumnRenamed(
-        "centroid_id", "_coarse_id"
-    )
-    fine_arr = fine.groupBy(F.col("coarse_id").alias("_coarse_id")).agg(
-        F.collect_list(
-            F.struct(F.col("centroid_id"), F.col("centroid"))
-        ).alias("_fc")
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("_fc"),
-            lambda c: F.struct(
-                dot(F.col(vcol), c["centroid"]).alias("s"),
-                (-c["centroid_id"]).alias("nid"),
-            ),
-        )
-    )
-    return (
-        c1.join(F.broadcast(fine_arr), "_coarse_id", "left")
-        .withColumn(
-            "_best",
-            F.when(
-                F.col(vcol).isNotNull() & F.col("_fc").isNotNull(), best
-            ),
-        )
-        .withColumn("centroid_id", -F.col("_best.nid"))
-        .drop("_fc", "_best", "_coarse_id")
-    )
 
 
 def train_centroids_2level(
@@ -966,7 +875,7 @@ def train_centroids_2level(
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Hierarchical spherical k-means → ``(coarse, fine)`` quantizer
-    tables for :func:`_assign_cells_2level` /
+    tables for the two-level :func:`_assign_cells` /
     :func:`semantic_dedup` (``coarse_centroids=``).
 
     ``coarse`` is :func:`train_centroids`'s output
@@ -988,7 +897,7 @@ def train_centroids_2level(
     Lloyd behavior, same as the flat trainer).
 
     Scale shape: per Lloyd iteration the corpus does ZERO shuffles for
-    assignment (two broadcast argmaxes) and one posexplode hash
+    assignment (one map-side two-level argmax) and one posexplode hash
     aggregation for the mean — identical stage structure to the flat
     trainer, but each row computes √k + √k dots instead of k.
     """
@@ -997,8 +906,10 @@ def train_centroids_2level(
         F.col(id_col).alias("_vid"),
         l2_normalize(F.col(vec_col)).alias("_v"),
     )
-    assigned = _assign_cells(norm, "_v", coarse).withColumnRenamed(
-        "centroid_id", "_cid"
+    assigned = (
+        _assign_cells(norm, "_v", coarse)
+        .withColumnRenamed("centroid_id", "_cid")
+        .drop("_csim")
     )
     w = Window.partitionBy("_cid").orderBy("_h", "_vid")
     fine = (
@@ -1014,7 +925,7 @@ def train_centroids_2level(
         )
     )
     for _ in range(n_iters):
-        a2 = _assign_cells_2level(norm, "_v", coarse, fine)
+        a2 = _assign_cells(norm.select("_v"), "_v", fine, coarse)
         fine = (
             a2.filter(F.col("centroid_id").isNotNull())
             .select(
@@ -1046,8 +957,8 @@ def train_centroids_2level(
 
 
 def _require_numeric_id(df: DataFrame, col: str, what: str) -> None:
-    """The module's one assignment rule implements smaller-id tiebreaks
-    by NEGATING the id inside an argmax struct — which only type-checks
+    """The decontamination argmax implements its smaller-id tiebreak by
+    NEGATING the id inside an argmax struct — which only type-checks
     for numeric ids. Fail loudly up front instead of letting Spark
     raise an AnalysisException deep inside the plan."""
     from pyspark.sql.types import NumericType
@@ -1081,11 +992,10 @@ def semantic_decontaminate(
     discipline) and ``benchmark_id`` = the argmax benchmark row (ties
     to the smaller id — the engine's one assignment rule).
 
-    Scale shape: identical to `cell_outliers` — benchmarks are
-    MB-scale against a TB-scale corpus, so the benchmark set folds to
-    ONE broadcast array<struct> row and the max-similarity is a pure
-    map-side transform/array_max; the corpus plan is scan → project,
-    zero shuffles, whole-stage codegen end to end.
+    Scale shape: benchmarks are MB-scale against a TB-scale corpus, so
+    the benchmark set folds to ONE broadcast array<struct> row and the
+    max-similarity is a pure map-side transform/array_max; the corpus
+    plan is scan → project, zero shuffles.
 
     NULL (and all-zero) corpus vectors get NULL sim/benchmark_id and
     ``contaminated = false``: an unscorable row is not evidence of
@@ -1093,7 +1003,7 @@ def semantic_decontaminate(
     to flag; a decontamination pass must not silently drop it.
 
     ``bench_id_col`` must be NUMERIC (the smaller-id tiebreak negates
-    it inside the argmax struct — the module's one assignment rule);
+    it inside the argmax struct);
     a non-numeric id raises up front. The benchmark fold is guarded by
     ``max_benchmark_rows`` (one bounded count): past it the single
     broadcast array row this plan builds turns pathological (100k
@@ -1180,56 +1090,24 @@ def cell_outliers(
     quality gate that silently keeps unscorable rows is how corrupt
     batches sneak into a corpus.
 
-    Scale shape: ZERO shuffles of the corpus. The centroid set folds
-    to a single array<struct> row (one tiny agg over the prototype
-    set), broadcast-crossJoins onto every corpus partition, and the
-    argmax is a pure map-side ``transform`` + ``array_max`` over that
-    array — no groupBy on the row id, no join-back for the NULL rows
-    (they are flagged inline). The corpus plan is scan → project,
-    whole-stage-codegen end to end. Cosine (not dot) is used so
-    callers can pass raw un-normalized prototypes, e.g. rows sampled
-    straight from the corpus.
+    Scale shape: ZERO shuffles of the corpus — the assignment is
+    :func:`_assign_cells`, whose cosine lets callers pass raw
+    un-normalized prototypes, e.g. rows sampled straight from the
+    corpus.
     """
-    cents = centroids.agg(
-        F.collect_list(
-            F.struct(F.col("centroid_id"), F.col("centroid"))
-        ).alias("_cents")
+    # zero vectors have no direction: they enter the kernel as NULL so
+    # they take the NULL-cell outlier branch with the NULL vectors
+    scorable = F.when(l2_norm(F.col(vec_col)) > 0, F.col(vec_col))
+    assigned = _assign_cells(
+        vectors.select(id_col, scorable.alias("_v")), "_v", centroids
     )
-    # struct comparison is field-by-field, so max on (sim, -id) is
-    # argmax-cosine with ties to the SMALLER centroid id — the
-    # engine's one assignment rule (_assign_cells uses the same key)
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                cosine(F.col(vec_col), c["centroid"]).alias("s"),
-                (-c["centroid_id"]).alias("nid"),
-            ),
-        )
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cents))
-        # zero vectors score 0/0 = NULL cosine against EVERY centroid;
-        # without the norm guard array_max would fall through to the
-        # nid tiebreak and report a meaningless non-NULL centroid_id
-        # with NULL sim. Route them through the same NULL-cell outlier
-        # branch as NULL vectors — they are equally unscorable.
-        .withColumn(
-            "_best",
-            F.when(
-                F.col(vec_col).isNotNull()
-                & (l2_norm(F.col(vec_col)) > 0),
-                best,
-            ),
-        )
-        .select(
-            id_col,
-            (-F.col("_best.nid")).alias("centroid_id"),
-            F.round("_best.s", 6).alias("centroid_sim"),
-            F.coalesce(
-                F.col("_best.s") < F.lit(float(min_sim)), F.lit(True)
-            ).alias("is_outlier"),
-        )
+    return assigned.select(
+        id_col,
+        "centroid_id",
+        F.round("_csim", 6).alias("centroid_sim"),
+        F.coalesce(F.col("_csim") < F.lit(float(min_sim)), F.lit(True)).alias(
+            "is_outlier"
+        ),
     )
 
 
@@ -1256,27 +1134,25 @@ def ivf_topk(
     probe over the same cells is identical regardless of how the
     corpus was assigned to them.
     """
-    norm = vectors.withColumnRenamed(id_col, "_vid").withColumn(
-        "_v", l2_normalize(F.col(vec_col))
-    )
     # tiny (n_centroids rows) but referenced twice (index assignment +
     # query probing) — persist so the Lloyd-iteration lineage runs once
+    coarse = None
     if n_fine is not None:
         coarse, centroids = train_centroids_2level(
             vectors, n_centroids, n_fine, n_iters, vec_col, id_col
         )
         coarse = coarse.persist()
         centroids = centroids.persist()
-        # map-side two-stage assignment — original columns ride along
-        index = _assign_cells_2level(norm, "_v", coarse, centroids).drop(
-            "_v"
-        )
     else:
         centroids = train_centroids(
             vectors, n_centroids, n_iters, vec_col, id_col
         ).persist()
-        # map-side assignment carries the original columns — no join-back
-        index = _assign_cells(norm, "_v", centroids).drop("_v")
+    index = _assign_cells(
+        vectors.select(F.col(id_col).alias("_vid"), vec_col),
+        vec_col,
+        centroids,
+        coarse,
+    )
     qn = queries.withColumn("_qv", l2_normalize(F.col("query_vec")))
     qscored = qn.crossJoin(F.broadcast(centroids)).withColumn(
         "_sim", dot(F.col("_qv"), F.col("centroid"))
@@ -1289,9 +1165,8 @@ def ivf_topk(
         .filter(F.col("_pr") <= nprobe)
         .select("query_id", "query_vec", "centroid_id")
     )
-    # narrow projection before the ranking window (r13 opt round,
-    # guide §2.3): the exchange needs (query_id, _vid, cosine), never
-    # the two dense vectors that computed the score
+    # narrow projection before the ranking window: the exchange needs
+    # (query_id, _vid, cosine), never the two dense vectors
     cands = probes.join(index, "centroid_id").select(
         "query_id",
         "_vid",
@@ -1381,8 +1256,8 @@ def lsh_topk(
     # {b, b^1, b^2, ...} are pairwise distinct and every corpus vector
     # has exactly ONE bucket, so a (query, vector) pair can match
     # through at most one probed bucket
-    # narrow projection before the ranking window (r13 opt round,
-    # guide §2.3: ids + score only through the exchange)
+    # narrow projection before the ranking window: ids + score only
+    # through the exchange
     joined = q.join(v, "bucket", "inner").select(
         "query_id",
         F.col(id_col),
@@ -1478,10 +1353,9 @@ def _cells_projection(
         )
     if cell_storage == "pq":
         cb_row, pq_m, dsub = pq
-        # assigned carries `_v` (the normalized vector) from the
-        # argmax — encode slices it directly, no re-normalize
         return (
-            assigned.crossJoin(F.broadcast(cb_row))
+            assigned.withColumn("_v", l2_normalize(F.col(vec_col)))
+            .crossJoin(F.broadcast(cb_row))
             .select(
                 F.col("_vid").alias(id_col),
                 _pq_codes("_v", pq_m, dsub).alias("codes"),
@@ -1819,8 +1693,7 @@ def write_ivf_index(
     corpus, so the layout indexes every row regardless. The sample is
     ``xxhash64(id) % 10_000 < fraction·10_000`` — reproducible across
     runs/partitionings, unlike ``DataFrame.sample``, so rebuilds stay
-    deterministic. Default None keeps exact parity with pre-r9 builds
-    (train = full corpus).
+    deterministic. Default None trains on the full corpus.
 
     ``cell_storage="pq"`` stores each cell vector product-quantized
     (`train_pq_codebooks`: ``pq_m`` sub-codebooks of ``pq_k``
@@ -1857,17 +1730,17 @@ def write_ivf_index(
     partition pruning — on object storage the dominant ANN cost is the
     scan, and no join strategy can cut a scan the way pruning does
     (same principle as `sinks.write_key_bucketed` for key probes).
-    Build cost: `train_centroids` (broadcast Lloyd iterations) + one
+    Build cost: `train_centroids` (map-side Lloyd iterations) + one
     corpus shuffle on cell id for the partitioned write.
 
     Pass ``n_fine`` to build with the TWO-LEVEL quantizer
     (`train_centroids_2level`): ``n_centroids`` coarse cells ×
     ``n_fine`` fine cells each, corpus assignment via the hierarchical
-    argmax (`_assign_cells_2level` — O(√k+√k) dots per row instead of
+    argmax (`_assign_cells` — O(√k+√k) dots per row instead of
     k). This is the billion-vector operating point: flat assignment
     against k cells is O(n·k) FLOPs, and at scaled-k (k ∝ n, the
     IVF/SemDeDup regime) the build's assignment stage goes quadratic —
-    the r7 factor-100 scalecheck measured exactly that term. The
+    the factor-100 scalecheck measured exactly that term. The
     LAYOUT is unchanged: fine centroid ids are the global
     ``centroid_id=`` partition values (``centroids/`` carries the fine
     table with its ``coarse_id`` column; the coarse table lands beside
@@ -1882,9 +1755,9 @@ def write_ivf_index(
     centroids land together in a fresh ``versions/v<n>-<uuid>/`` dir
     and become visible only when the manifest publishes, so a crash at
     ANY point leaves the old index fully live — never new-quantizer
-    cells scored against old centroids (round-4 ADVICE: the old
-    in-place write had exactly that torn window between its two
-    overwrites). Reclaim superseded versions with `vacuum_ivf_index`.
+    cells scored against old centroids (an in-place write would have
+    exactly that torn window between its two overwrites). Reclaim
+    superseded versions with `vacuum_ivf_index`.
     """
     import posixpath as _pp
     import uuid as _uuid
@@ -1916,24 +1789,23 @@ def write_ivf_index(
     version = vm.latest_version(spark)
     rel = _pp.join("versions", f"v{version + 1}-{_uuid.uuid4().hex[:8]}")
     vroot = _pp.join(path, rel)
-    norm = vectors.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col),
-        l2_normalize(F.col(vec_col)).alias("_v"),
-    )
     if n_fine is not None:
         coarse, centroids = train_centroids_2level(
             train, n_centroids, n_fine, n_iters, vec_col, id_col
         )
         coarse = coarse.persist()
         centroids = centroids.persist()
-        cells = _assign_cells_2level(norm, "_v", coarse, centroids)
     else:
         coarse = None
         centroids = train_centroids(
             train, n_centroids, n_iters, vec_col, id_col
         ).persist()
-        cells = _assign_cells(norm, "_v", centroids)
+    cells = _assign_cells(
+        vectors.select(F.col(id_col).alias("_vid"), vec_col),
+        vec_col,
+        centroids,
+        coarse,
+    )
     cells = _cells_projection(cells, cell_storage, vec_col, id_col, pq=pq)
     # batch=base level from day 0 so `append_ivf_index` can fold daily
     # vector batches idempotently beside it (same layout rationale as
@@ -2010,12 +1882,12 @@ def _ivf_meta_from_payload(
             "n_iters": int(payload["n_iters"]),
             "vec_col": str(payload["vec_col"]),
             "id_col": str(payload["id_col"]),
-            # absent on flat builds (and every pre-r8 manifest)
+            # absent on flat builds and older manifests
             "n_fine": (
                 int(payload["n_fine"]) if "n_fine" in payload else None
             ),
             "cell_storage": str(payload.get("cell_storage", "raw")),
-            # present iff cell_storage == "pq" (r9 tier)
+            # present iff cell_storage == "pq"
             "pq_m": int(payload["pq_m"]) if "pq_m" in payload else None,
             "pq_dsub": (
                 int(payload["pq_dsub"]) if "pq_dsub" in payload else None
@@ -2162,11 +2034,6 @@ def append_ivf_index(
             return
         meta, data_root = _ivf_meta_from_payload(version, payload, path)
         vec_col, id_col = meta["vec_col"], meta["id_col"]
-        norm = vectors.select(
-            F.col(id_col).alias("_vid"),
-            F.col(vec_col),
-            l2_normalize(F.col(vec_col)).alias("_v"),
-        )
         # the batch assigns against the STORED quantizer in its own
         # geometry: hierarchical argmax on 2-level indexes (same
         # O(√k+√k) dots/row as the build — an append that flat-scanned
@@ -2175,10 +2042,12 @@ def append_ivf_index(
         coarse, centroids = _load_quantizer(
             spark, data_root, meta["n_fine"]
         )
-        if coarse is not None:
-            assigned = _assign_cells_2level(norm, "_v", coarse, centroids)
-        else:
-            assigned = _assign_cells(norm, "_v", centroids)
+        assigned = _assign_cells(
+            vectors.select(F.col(id_col).alias("_vid"), vec_col),
+            vec_col,
+            centroids,
+            coarse,
+        )
         pq = None
         if meta["cell_storage"] == "pq":
             pq = (

@@ -956,9 +956,9 @@ def llm_semantic_dedup_ivf_diverse(
     perturbed corpus (`_planted_neardup_corpus`: cross pairs ≤ 0.61,
     planted pairs ≥ 0.996) makes the pair graph a perfect matching
     under ANY quantizer, and the query replays the expected decisions
-    IN-PLAN from the same stored centroids with bit-identical
-    expressions (`_assign_cells` argmax + unrounded dot, exactly what
-    `semantic_dedup`'s keep rule computes): a planted pair that
+    IN-PLAN from the same stored centroids with the same kernel call
+    (`_assign_cells` cell + unrounded `_csim`, bit-identical to what
+    `semantic_dedup`'s keep rule reads): a planted pair that
     co-assigns must form a group labeled by the source id with ONE
     survivor — the member LEAST similar to the cell prototype (ties
     to the smaller id); a split pair must surface as two kept
@@ -983,24 +983,18 @@ def llm_semantic_dedup_ivf_diverse(
             keep="far_from_centroid",
             centroids=cents,
         )
-        # in-plan replay with semantic_dedup's own expressions over the
-        # same stored centroids: cell (argmax dot, ties to smaller id)
-        # and UNROUNDED own-prototype similarity per row
-        norm = corpus.select(
-            F.col("vec_id").alias("_vid"),
-            similarity.l2_normalize(F.col("embedding")).alias("_v"),
-        )
-        sims = (
-            similarity._assign_cells(norm, "_v", cents)
-            .join(F.broadcast(cents), "centroid_id")
-            .select(
-                F.col("_vid").alias("vec_id"),
-                F.col("centroid_id").alias("cell"),
-                similarity.dot(F.col("_v"), F.col("centroid")).alias(
-                    "csim"
-                ),
-                F.col("_v").alias("nv"),
-            )
+        # in-plan replay with the kernel call semantic_dedup makes over
+        # the same stored centroids: cell (argmax cosine, ties to the
+        # smaller id) and UNROUNDED own-prototype similarity per row
+        sims = similarity._assign_cells(
+            corpus.select(F.col("vec_id").alias("_vid"), "embedding"),
+            "embedding",
+            cents,
+        ).select(
+            F.col("_vid").alias("vec_id"),
+            F.col("centroid_id").alias("cell"),
+            F.col("_csim").alias("csim"),
+            similarity.l2_normalize(F.col("embedding")).alias("nv"),
         )
         s = sims.filter(F.col("vec_id") < 100000).alias("s")
         c = (

@@ -404,7 +404,6 @@ def make_semantic_ingest(
 
     from ..operators.similarity import (
         _assign_cells,
-        _assign_cells_2level,
         _decoded_cells,
         _load_quantizer,
         _resolve_ivf_index,
@@ -437,14 +436,16 @@ def make_semantic_ingest(
             batch_df.select(id_col), batch_id,
         )
         coarse, fine = _load_quantizer(spark, data_root, meta["n_fine"])
-        norm = batch_df.select(
-            F.col(id_col).alias("_vid"),
-            l2_normalize(F.col(vec_col)).alias("_v"),
+        # the same kernel input as the index fold (raw vectors), so a
+        # row probes the cell append_ivf_index will store it in
+        assigned = _assign_cells(
+            batch_df.select(F.col(id_col).alias("_vid"), vec_col),
+            vec_col,
+            fine,
+            coarse,
+        ).select(
+            "_vid", "centroid_id", l2_normalize(F.col(vec_col)).alias("_v")
         )
-        if coarse is not None:
-            assigned = _assign_cells_2level(norm, "_v", coarse, fine)
-        else:
-            assigned = _assign_cells(norm, "_v", fine)
         # referenced three times (pair join ×2 legs, corpus probe, cell
         # list) — localCheckpoint so the argmax lineage runs once and
         # the bounded collect below doesn't recompute it

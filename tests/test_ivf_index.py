@@ -137,6 +137,98 @@ class TestIvfIndex:
         assert b.exceptAll(a).count() == 0
 
 
+def _py_lloyd(vectors, seed_ids, n_iters):
+    """Plain NumPy spherical k-means from the given seed rows: cosine
+    argmax with ties to the smaller centroid id, per-cell mean,
+    re-normalized — the train_centroids contract."""
+    import numpy as np
+
+    unit = {i: np.asarray(v) / np.linalg.norm(v) for i, v in vectors}
+    cents = [(cid, unit[i]) for cid, i in enumerate(seed_ids, start=1)]
+    for _ in range(n_iters):
+        cells: dict = {}
+        for v in unit.values():
+            cid = max(cents, key=lambda t: (v @ t[1] / np.linalg.norm(t[1]), -t[0]))[0]
+            cells.setdefault(cid, []).append(v)
+        cents = []
+        for cid, vs in sorted(cells.items()):
+            m = np.mean(vs, axis=0)
+            cents.append((cid, m / np.linalg.norm(m)))
+    return cents
+
+
+class TestNullEmbeddings:
+    def test_train_centroids_unchanged_and_null_rows_ignored(self, spark):
+        """Seeds are the non-NULL rows with the smallest
+        (xxhash64(id), id); the Lloyd iterations match a NumPy
+        replay; and NULL-embedding rows change neither (they used to
+        become NULL seeds and crash the assignment)."""
+        from datawaves_etl_airflow_spark.operators.similarity import (
+            train_centroids,
+        )
+
+        vecs = _vectors(spark, n=200)
+        with_nulls = vecs.unionByName(
+            spark.range(5000, 5040).select(
+                F.col("id").alias("vec_id"),
+                F.lit(None).cast("array<double>").alias("embedding"),
+            )
+        )
+        seed_ids = [
+            r.vec_id
+            for r in vecs.select("vec_id", F.xxhash64("vec_id").alias("h"))
+            .orderBy("h", "vec_id")
+            .limit(6)
+            .collect()
+        ]
+        rows = [(r.vec_id, r.embedding) for r in vecs.collect()]
+        for n_iters in (0, 2):
+            want = _py_lloyd(rows, seed_ids, n_iters)
+            got = sorted(
+                (r.centroid_id, r.centroid)
+                for r in train_centroids(vecs, 6, n_iters=n_iters).collect()
+            )
+            assert [c for c, _ in got] == [c for c, _ in want]
+            for (_, g), (_, w) in zip(got, want):
+                assert g == pytest.approx(list(w), abs=1e-9)
+            got_nulls = sorted(
+                (r.centroid_id, r.centroid)
+                for r in train_centroids(
+                    with_nulls, 6, n_iters=n_iters
+                ).collect()
+            )
+            assert got_nulls == got
+
+    def test_null_embedding_corpus_writes_and_searches(
+        self, spark, tmp_path
+    ):
+        """NULL-embedding rows land in the NULL cell of a built index
+        and never reach a probe: a full-probe search equals brute force
+        over the non-NULL rows."""
+        from datawaves_etl_airflow_spark.operators.similarity import (
+            brute_force_topk,
+        )
+
+        vecs = _vectors(spark, n=120)
+        nulls = spark.range(9000, 9030).select(
+            F.col("id").alias("vec_id"),
+            F.lit(None).cast("array<double>").alias("embedding"),
+        )
+        p = str(tmp_path / "ivfnull")
+        write_ivf_index(vecs.unionByName(nulls), p, n_centroids=4, n_iters=2)
+        cells = spark.read.parquet(_data_root(spark, p) + "/cells")
+        assert cells.count() == 150
+        assert {
+            r.vec_id for r in cells.filter(F.col("centroid_id").isNull()).collect()
+        } == set(range(9000, 9030))
+        q = _queries(spark)
+        got = ivf_search_index(q, p, nprobe=4, k=5)
+        want = brute_force_topk(vecs, q, k=5)
+        cols = ["query_id", "match_id", "rank", "cosine_sim"]
+        assert got.select(cols).exceptAll(want.select(cols)).count() == 0
+        assert want.select(cols).exceptAll(got.select(cols)).count() == 0
+
+
 class TestPointerFlipRebuild:
     """IVF rebuilds commit by manifest pointer flip (round-4 ADVICE:
     the in-place cells-then-centroids overwrite had a torn window that
@@ -348,7 +440,7 @@ class Test2LevelIvfIndex:
         self, spark, tmp_path
     ):
         from datawaves_etl_airflow_spark.operators.similarity import (
-            _assign_cells_2level,
+            _assign_cells,
             append_ivf_index,
             l2_normalize,
             read_ivf_quantizer,
@@ -372,7 +464,7 @@ class Test2LevelIvfIndex:
             F.col("vec_id").alias("_vid"),
             l2_normalize(F.col("embedding")).alias("_v"),
         )
-        want = _assign_cells_2level(norm, "_v", coarse, fine).select(
+        want = _assign_cells(norm, "_v", fine, coarse).select(
             F.col("_vid").alias("vec_id"), "centroid_id"
         )
         got = stored.join(

@@ -46,9 +46,6 @@ ALLOWED_BNLJ = {
     "x2_above_global_avg": "broadcast 1-row global-average aggregate "
     "(scalar subquery)",
     # registered by the round-6 rotation (new operators):
-    "llm_cell_outliers": "corpus x broadcast 1-row centroid-array "
-    "aggregate (collect_list over the bounded prototype set) — the "
-    "zero-shuffle map-side argmax plan",
     "llm_temperature_sample": "broadcast 1-row total-weight aggregate "
     "(sum over the per-source counts, <= n_sources rows upstream)",
     # registered by the round-7 rotation (new operators):
@@ -66,7 +63,7 @@ ALLOWED_BNLJ = {
     "set (the documented exact-ANN baseline shape)",
     "llm_semantic_decontaminate": "corpus x broadcast 1-row benchmark "
     "array aggregate (collect_list over the 10-row benchmark set) — "
-    "the cell_outliers zero-shuffle argmax shape",
+    "a zero-shuffle map-side argmax",
     # r10 post-rotation additions, first registered by the r11
     # rotation (same inherited bm25 stats-broadcast shape):
     "llm_bm25_prf": "bm25's broadcast 1-row (N, avgdl) corpus-stats "

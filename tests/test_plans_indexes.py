@@ -153,18 +153,20 @@ class TestStreamSemanticScaledK:
     def test_batch_assignment_never_flat_scans_fine_table(
         self, spark, tmp_path, monkeypatch
     ):
-        """Corpus-scaled k (r8 verdict task 6): against a 2-level
-        index with k = 400 fine cells, the streaming batch's
-        assignment must pay the hierarchical O(√k + √k) dots/row —
-        i.e. every centroid table that reaches the flat argmax
-        (`_assign_cells`, the broadcast-fold map-side scorer) is a
-        LEVEL table of ≤ √k-ish rows (coarse list, or one coarse
-        cell's fine list), never the full 400-row fine table. A
-        stream that flat-assigned would reintroduce the O(n·k) term
-        the 2-level build exists to kill; recording the actual
-        argument is execution-true where a plan-string grep could
+        """Corpus-scaled k: against a 2-level index with k = 400 fine
+        cells, the streaming batch's assignment must pay the
+        hierarchical O(√k + √k) dots/row. Every call of the assignment
+        kernel that gets the 400-row fine table must also get the
+        coarse table (the two-level argmax), and each row must land in
+        a fine cell of its coarse winner even where the flat argmax
+        over all 400 fine cells picks another cell. A stream that
+        flat-assigned would reintroduce the O(n·k) term the 2-level
+        build exists to kill; recording the actual arguments and
+        outputs is execution-true where a plan-string grep could
         silently match nothing."""
         import random
+
+        import numpy as np
 
         from datawaves_etl_airflow_spark.operators import similarity as sim
         from datawaves_etl_airflow_spark.streaming import ingest as ing
@@ -183,12 +185,13 @@ class TestStreamSemanticScaledK:
         sim.write_ivf_index(
             vecs, idx, n_centroids=n_coarse, n_iters=1, n_fine=n_fine
         )
-        seen_sizes = []
+        calls = []
         real_assign = sim._assign_cells
 
-        def recording(norm, vcol, centroids):
-            seen_sizes.append(centroids.count())
-            return real_assign(norm, vcol, centroids)
+        def recording(norm, vcol, centroids, coarse=None):
+            out = real_assign(norm, vcol, centroids, coarse)
+            calls.append((centroids.count(), coarse, vcol, out))
+            return out
 
         monkeypatch.setattr(sim, "_assign_cells", recording)
         # patch BEFORE make: the ingest binds its imports at make time
@@ -201,11 +204,39 @@ class TestStreamSemanticScaledK:
             "vec_id long, embedding array<double>",
         )
         fn(batch, 0)
-        assert seen_sizes, "flat argmax never ran — wiring changed?"
-        # every table the flat scorer saw is a level (≤ n_coarse =
-        # n_fine = 20 = √k rows); the 400-row fine table never did
-        assert max(seen_sizes) <= n_coarse
-        # and the batch actually ingested (non-vacuous)
+        assert calls, "assignment never ran — wiring changed?"
+        assert all(n <= n_coarse or co is not None for n, co, _, _ in calls)
+
+        coarse_t, fine_t = sim.read_ivf_quantizer(spark, idx)
+        co = sorted((r.centroid_id, r.centroid) for r in coarse_t.collect())
+        fi = sorted(
+            (r.centroid_id, r.coarse_id, r.centroid) for r in fine_t.collect()
+        )
+        assert len(fi) > n_coarse
+
+        def argmax(v, table):
+            v = np.asarray(v)
+            return max(
+                table,
+                key=lambda t: (
+                    v @ np.asarray(t[-1])
+                    / (np.linalg.norm(v) * np.linalg.norm(t[-1])),
+                    -t[0],
+                ),
+            )[0]
+
+        differs = 0
+        for _, coarse, vcol, out in calls:
+            if coarse is None:
+                continue
+            for r in out.collect():
+                c1 = argmax(r[vcol], co)
+                in_cell = [t for t in fi if t[1] == c1]
+                assert r.centroid_id == argmax(r[vcol], in_cell)
+                differs += r.centroid_id != argmax(r[vcol], fi)
+        # non-vacuous: some row's flat argmax leaves its coarse cell
+        assert differs > 0
+        # and the batch actually ingested
         import os as _os
 
         assert spark.read.parquet(

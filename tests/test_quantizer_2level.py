@@ -69,8 +69,8 @@ class TestAssign2Level:
         )
         got = {
             r._vid: r.centroid_id
-            for r in S._assign_cells_2level(
-                norm, "_v", coarse, fine
+            for r in S._assign_cells(
+                norm, "_v", fine, coarse
             ).collect()
         }
         nv = {r._vid: r._v for r in norm.collect()}
@@ -95,8 +95,8 @@ class TestAssign2Level:
         )
         rows = {
             r._vid: r.centroid_id
-            for r in S._assign_cells_2level(
-                norm, "_v", coarse, fine
+            for r in S._assign_cells(
+                norm, "_v", fine, coarse
             ).collect()
         }
         assert rows[2] is None
@@ -120,8 +120,8 @@ class TestAssign2Level:
         )
         rows = {
             r._vid: r.centroid_id
-            for r in S._assign_cells_2level(
-                norm, "_v", coarse, fine
+            for r in S._assign_cells(
+                norm, "_v", fine, coarse
             ).collect()
         }
         assert rows[1] == 1
@@ -201,21 +201,19 @@ class TestSemanticDedup2Level:
 
 class TestAssign2LevelPlan:
     def test_corpus_never_shuffles(self, vecs, quantizer):
-        """Both argmax stages are map-side on the corpus: level 1 is
-        the 1-row broadcast fold, level 2 a broadcast hash join of the
-        per-cell fine arrays — the only exchanges in the plan carry
-        centroid tables (k rows), never the corpus."""
+        """Both argmax stages run map-side in one Arrow pass over the
+        corpus: the centroid tables are collected up front, so the
+        plan has no exchange and no join at all."""
         coarse, fine = quantizer
         norm = vecs.select(
             F.col("vec_id").alias("_vid"),
             S.l2_normalize(F.col("embedding")).alias("_v"),
         )
-        a = S._assign_cells_2level(norm, "_v", coarse, fine)
+        a = S._assign_cells(norm, "_v", fine, coarse)
         p = a._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(_vid" not in p
-        assert "SortMergeJoin" not in p
-        assert "BroadcastNestedLoopJoin" in p  # folded coarse row
-        assert "BroadcastHashJoin" in p  # per-cell fine arrays
+        assert "Exchange" not in p
+        assert "Join" not in p
+        assert "MapInPandas" in p
 
 
 class TestFarFromCentroid2Level:

@@ -307,14 +307,123 @@ class TestIvfDiverseQueryNonVacuous:
         assert 0 < kept_src < n_pairs
 
 
-class TestR14BlasInternals:
-    """r14 opt round: the pair stage moved from an a⋈b self-join on
-    centroid_id + interpreted zip_with/aggregate dots to one grouped
-    Arrow pass with per-cell BLAS Gram matrices, and the flat-path
-    assignment moved to a NumPy argmax (emitting _csim). These tests
-    pin the new internals against the old expression semantics on the
-    sf0.001 fixture corpus — pair SET equality and assignment
-    equality, not just end-state booleans."""
+def _py_argmax(v, table):
+    """Plain-Python reference of the assignment rule over
+    ``(id, vector)`` rows: cosine ``dot / (|v|·|c|)`` (0 where a norm
+    is 0), ties to the smaller id, NULL ids/vectors never win, NULL
+    vector or empty table → ``(None, None)``."""
+    import math
+
+    live = [(i, c) for i, c in table if i is not None and c is not None]
+    if v is None or not live:
+        return None, None
+
+    def sim(c):
+        den = math.sqrt(sum(x * x for x in v)) * math.sqrt(
+            sum(x * x for x in c)
+        )
+        return sum(x * y for x, y in zip(v, c)) / den if den > 0 else 0.0
+
+    cid, c = max(sorted(live), key=lambda t: (sim(t[1]), -t[0]))
+    return cid, sim(c)
+
+
+#: (name, vectors, centroids, coarse) — coarse None is the flat rule;
+#: otherwise centroids are (id, coarse_id, vector) fine rows. Small
+#: dyadic coordinates keep every tie exact in both implementations.
+_KERNEL_CASES = [
+    (
+        "ties_go_to_smaller_id",
+        [(1, [1.0, 1.0]), (2, [2.0, 0.0]), (3, [0.0, 4.0])],
+        # 5 and 2 are the same vector; 7 is parallel to 1 at twice the
+        # length; 1 and 4 tie against row 1 at 45°
+        [(5, [1.0, 0.0]), (2, [1.0, 0.0]), (7, [0.0, 2.0]),
+         (4, [0.0, 1.0])],
+        None,
+    ),
+    (
+        "null_and_zero_vectors",
+        [(1, None), (2, [0.0, 0.0]), (3, [0.5, 0.25])],
+        [(3, [1.0, 0.0]), (1, [0.0, 1.0])],
+        None,
+    ),
+    (
+        "null_centroid_rows_never_win",
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0])],
+        [(0, None), (None, [1.0, 0.0]), (6, [0.0, 1.0]), (9, [1.0, 0.5])],
+        None,
+    ),
+    ("empty_centroid_set", [(1, [1.0, 0.0]), (2, None)], [], None),
+    ("all_null_centroids", [(1, [1.0, 0.0])], [(1, None), (2, None)], None),
+    (
+        "two_level",
+        # row 3's best fine centroid overall (id 22) sits in coarse
+        # cell 2, but its coarse winner is cell 1: it must take 12
+        [(1, [1.0, 0.25]), (2, [0.25, 1.0]), (3, [1.0, 0.75]),
+         (4, [0.0, 0.0]), (5, None), (6, [-1.0, 0.0])],
+        [(11, 1, [1.0, 0.0]), (12, 1, [1.0, 0.125]),
+         (22, 2, [1.0, 0.75]), (21, 2, [0.0, 1.0])],
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])],
+    ),
+]
+
+
+class TestAssignCellsKernel:
+    def test_matches_python_argmax_table(self, spark):
+        """The one assignment kernel against a plain-Python argmax, flat
+        and two-level, on ties, NULL and zero vectors, NULL centroid
+        rows and empty or all-NULL centroid sets (coarse cell 3 of the
+        two-level case has no fine rows: row 6 gets a NULL cell)."""
+        from datawaves_etl_airflow_spark.operators.similarity import (
+            _assign_cells,
+        )
+
+        for name, vecs, cents, coarse in _KERNEL_CASES:
+            norm = spark.createDataFrame(
+                vecs, "_vid long, _v array<double>"
+            )
+            if coarse is None:
+                fine_df = spark.createDataFrame(
+                    cents, "centroid_id int, centroid array<double>"
+                )
+                coarse_df = None
+            else:
+                fine_df = spark.createDataFrame(
+                    cents,
+                    "centroid_id int, coarse_id int, centroid array<double>",
+                )
+                coarse_df = spark.createDataFrame(
+                    coarse, "centroid_id int, centroid array<double>"
+                )
+            out = _assign_cells(norm, "_v", fine_df, coarse_df)
+            assert out.columns == ["_vid", "_v", "centroid_id", "_csim"]
+            got = {r["_vid"]: (r["centroid_id"], r["_csim"]) for r in out.collect()}
+            assert set(got) == {vid for vid, _ in vecs}, name
+            for vid, v in vecs:
+                if coarse is None:
+                    want = _py_argmax(v, cents)
+                else:
+                    c1, _ = _py_argmax(v, coarse)
+                    want = _py_argmax(
+                        v, [(i, c) for i, cc, c in cents if cc == c1]
+                    )
+                cid, sim = got[vid]
+                assert cid == want[0], (name, vid, got[vid], want)
+                if want[1] is None:
+                    assert sim is None, (name, vid)
+                else:
+                    assert sim == pytest.approx(want[1], abs=1e-12), (name, vid)
+            if coarse is not None:
+                # non-vacuous: the flat argmax over all fine rows differs
+                flat, _ = _py_argmax(dict(vecs)[3], [(i, c) for i, _, c in cents])
+                assert got[3][0] == 12 and flat == 22
+
+
+class TestPairStage:
+    """The SemDeDup pair stage (one grouped Arrow pass with per-cell
+    BLAS Gram blocks) and its max_cell_size valve, pinned on the
+    sf0.001 fixture corpus against the expression self-join it
+    replaced — pair SET equality, not just end-state booleans."""
 
     def _fixture_assigned(self, spark):
         from pyspark.sql import functions as F
@@ -330,32 +439,13 @@ class TestR14BlasInternals:
                 "embedding",
             )
         )
-        valid = corpus.filter(F.col("embedding").isNotNull())
-        norm = valid.select(
+        norm = corpus.select(
             F.col("vec_id").alias("_vid"),
             similarity.l2_normalize(F.col("embedding")).alias("_v"),
         )
-        cents = similarity.train_centroids(valid, 8, n_iters=1)
+        cents = similarity.train_centroids(corpus, 8, n_iters=1)
         cents = spark.createDataFrame(cents.collect(), cents.schema)
-        return norm, cents
-
-    def test_numpy_assignment_equals_expression_argmax(self, spark):
-        from datawaves_etl_airflow_spark.operators import similarity
-
-        norm, cents = self._fixture_assigned(spark)
-        a_expr = {
-            r["_vid"]: r["centroid_id"]
-            for r in similarity._assign_cells(norm, "_v", cents)
-            .select("_vid", "centroid_id")
-            .collect()
-        }
-        a_np = {
-            r["_vid"]: r["centroid_id"]
-            for r in similarity._assign_cells_np(norm, "_v", cents)
-            .select("_vid", "centroid_id")
-            .collect()
-        }
-        assert a_expr == a_np
+        return similarity._assign_cells(norm, "_v", cents)
 
     def test_blas_pairs_equal_expression_join_pairs(self, spark):
         from pyspark.sql import functions as F
@@ -363,8 +453,7 @@ class TestR14BlasInternals:
         from datawaves_etl_airflow_spark.operators import similarity
         from datawaves_etl_airflow_spark.operators.similarity import dot
 
-        norm, cents = self._fixture_assigned(spark)
-        assigned = similarity._assign_cells_np(norm, "_v", cents)
+        assigned = self._fixture_assigned(spark)
         for threshold in (0.95, 0.999):
             blas = {
                 (r["id_a"], r["id_b"])
@@ -393,15 +482,12 @@ class TestR14BlasInternals:
             assert blas == expr and len(blas) > 0
 
     def test_blas_cell_cap_matches_windowed_exclusion(self, spark):
-        """max_cell_size inside the pair emitter must reproduce the
-        old windowed-count exclusion: an over-cap cell emits no
-        pairs, under-cap cells are untouched."""
-        from pyspark.sql import functions as F
-
+        """max_cell_size must reproduce the windowed-count exclusion:
+        an over-cap cell emits no pairs, under-cap cells are
+        untouched."""
         from datawaves_etl_airflow_spark.operators import similarity
 
-        norm, cents = self._fixture_assigned(spark)
-        assigned = similarity._assign_cells_np(norm, "_v", cents)
+        assigned = self._fixture_assigned(spark)
         counts = {
             r["centroid_id"]: r["count"]
             for r in assigned.groupBy("centroid_id").count().collect()

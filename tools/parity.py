@@ -27,11 +27,13 @@ import datetime as dt
 import decimal
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -118,12 +120,10 @@ def freshness(max_age: int) -> int:
     """
     import glob
     import json
-    import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, int] = {}
     rounds: list[int] = []
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         r = int(os.path.basename(f).split("_r")[1].split(".")[0])
         rounds.append(r)
         for q, row in json.load(open(f)).items():
