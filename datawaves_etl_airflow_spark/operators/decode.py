@@ -256,13 +256,15 @@ _UINT_WORD_SCHEMA = DecimalType(38, 0)
 
 @F.pandas_udf(_UINT_WORD_SCHEMA)
 def _uint256_word(data: pd.Series) -> pd.Series:
-    """binary 32-byte word → Decimal(38,0), >38 digits → null.
+    """binary 32-byte word → Decimal(38,0); >38 digits → null, and a
+    word shorter than 32 bytes → null (D-1's rule: `decode_abi` rejects
+    the same truncated log as malformed).
 
     The one Python touch in D-4 — input is 32 bytes/row, Arrow-batched.
     """
     out = []
     for b in data:
-        if b is None or len(b) == 0:
+        if b is None or len(b) < 32:
             out.append(None)
             continue
         v = int.from_bytes(bytes(b)[:32], "big")

@@ -20,7 +20,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
+
+from ..sources.fs import path_exists
 
 
 def write_partitioned(
@@ -74,15 +77,57 @@ def write_partitioned(
             spark.conf.set(key, prev)
 
 
-def _parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet path, returning None only when it does not exist.
+def partitioned_schema(
+    df: DataFrame, extra_partition_cols: list[str] | None = None
+) -> StructType:
+    """The schema to read back what `write_partitioned` (``df``,
+    ``extra_partition_cols``) wrote: ``df``'s other columns, then
+    ``dt`` (a date) and the extra partition columns in order, all
+    nullable, each of ``df``'s type. Inference finds the same schema,
+    with a job, when the extra partition columns are ints (the hash
+    buckets are): it guesses a partition column's type from its
+    directory names."""
+    parts = ["dt"] + (extra_partition_cols or [])
+    types = {f.name: f.dataType for f in df.schema.fields}
+    types["dt"] = DateType()
+    return StructType([
+        StructField(n, types[n], True)
+        for n in [c for c in df.columns if c not in parts] + parts
+    ])
 
-    Any other failure (corrupt footer, permissions) propagates — a
-    transient read error must not be mistaken for an empty warehouse,
-    or the dedup append silently duplicates rows.
+
+def read_day(
+    spark: SparkSession,
+    path: str,
+    ds: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """The ``dt = ds`` rows of the table `write_partitioned` keeps at
+    ``path``: the day's partition directory alone, read with
+    ``basePath`` so ``dt`` and any hash buckets stay columns, without
+    listing the table's other days. ``schema`` (the caller's known
+    table schema, partition columns last) skips the inference job. A
+    day without a partition reads the whole table filtered to the day:
+    empty, as a ``dt = ds`` filter over the table is."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    part = f"{path}/dt={ds}"
+    if path_exists(spark, part):
+        return reader.option("basePath", path).parquet(part)
+    return reader.parquet(path).filter(F.col("dt") == F.lit(ds).cast("date"))
+
+
+def _parquet_or_none(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame | None:
+    """Read a parquet path with a known ``schema`` (no inference job),
+    returning None only when the path does not exist.
+
+    Any other failure (corrupt file, permissions) propagates, at the
+    first action — a transient read error must not be mistaken for an
+    empty warehouse, or the dedup append silently duplicates rows.
     """
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
@@ -101,7 +146,8 @@ def append_dedup(
     J-6 anti-join with an append write."""
     spark = staged.sparkSession
     if path is not None:
-        existing_df = _parquet_or_none(spark, path)
+        # the key alone, read with the staged key's type
+        existing_df = _parquet_or_none(spark, path, staged.select(key).schema)
         if existing_df is not None:
             existing = existing_df.select(key).distinct()
             new = staged.join(existing, key, "left_anti")

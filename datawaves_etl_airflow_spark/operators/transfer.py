@@ -12,19 +12,24 @@ same contract as one operator over a writer target:
 - ``jdbc`` targets (Databricks SQL endpoint et al.) — the same copy
   plan with a JDBC writer, gated on the driver jar being present.
 
-The copy is partition-pruned (reads only ``dt = ds``) and idempotent
-(dynamic partition overwrite on the target), matching the daily
-re-runnable semantics of the rest of the engine.
+The copy reads only the day: a path source is opened at its
+``dt=ds`` partition directory (`sinks.read_day`) and never lists the
+table's other days; a DataFrame source is filtered on ``dt = ds``. It is idempotent (dynamic partition overwrite
+on the target), matching the daily re-runnable semantics of the rest
+of the engine. The returned row count is an ``Observation`` on the
+copied frame, filled by the write itself — no separate ``count()``
+job; a path source without the day's partition copies nothing and
+returns 0.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks import write_partitioned
+from .sinks import read_day, write_partitioned
 
 
 @dataclass(frozen=True)
@@ -46,13 +51,12 @@ def transfer_partition(
     """Copy one day's partition of ``source`` to the client target;
     returns the row count copied (the reference's transfer jobs are
     sized per-table the same way, resource_apply.py:41-57)."""
-    df = (
-        source
-        if isinstance(source, DataFrame)
-        else spark.read.parquet(source)
-    )
-    day = df.filter(F.col("dt") == F.lit(ds).cast("date"))
-    n = day.count()
+    if isinstance(source, DataFrame):
+        day = source.filter(F.col("dt") == F.lit(ds).cast("date"))
+    else:
+        day = read_day(spark, source, ds)
+    rows = Observation()
+    day = day.observe(rows, F.count(F.lit(1)).alias("n"))
     if target.kind == "path":
         out = day.drop("dt")
         write_partitioned(out, "", ds, path=f"{target.location}/{table}")
@@ -65,4 +69,4 @@ def transfer_partition(
         writer.save()
     else:
         raise ValueError(f"unknown transfer target kind {target.kind!r}")
-    return n
+    return rows.get["n"]

@@ -21,7 +21,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..chains import CHAINS, ChainConfig, ETHEREUM
 from ..operators import enrich, sinks, verify
@@ -30,6 +32,20 @@ from ..operators.decode import (
     extract_token_transfers,
 )
 from ..sources.staging import input_exists, read_staging
+
+
+def _inherit_local_properties(fn: Callable) -> Callable:
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties (job group, scheduler pool) and session tags in another
+    thread; ``fn`` itself when no Spark session is running."""
+    if SparkContext._active_spark_context is None:
+        return fn
+    session = (
+        SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    )
+    if session is None:
+        return fn
+    return inheritable_thread_target(session)(fn)
 
 
 @dataclass
@@ -71,7 +87,9 @@ class Pipeline:
         construction: a task is submitted only after every dependency's
         result is already in ``ctx``, and only the coordinating thread
         writes ``ctx``. 2-3 workers is plenty — enough to fill the
-        tail, not so many that jobs fight for executors."""
+        tail, not so many that jobs fight for executors. Pool tasks
+        run with the caller's Spark local properties, so their jobs
+        carry the caller's job group, as sequential ones do."""
         ctx = ctx if ctx is not None else {}
         order = self.order()
         for name in order:
@@ -95,7 +113,8 @@ class Pipeline:
             futures: dict = {}
             while ts.is_active() or futures:
                 for name in ts.get_ready():
-                    futures[pool.submit(self.tasks[name].fn, ctx)] = name
+                    fn = _inherit_local_properties(self.tasks[name].fn)
+                    futures[pool.submit(fn, ctx)] = name
                 if not futures:
                     break
                 done, _ = wait(futures, return_when=FIRST_COMPLETED)
@@ -154,6 +173,16 @@ def run_evm_day(
     to re-reading the enriched tables from the warehouse (which the
     enrich phase must have written earlier), exactly like the
     reference's spark-submit-per-task boundaries.
+
+    Every dt-partitioned warehouse table a task hands on (``enrich_*``,
+    ``parse_evt_*``, and the fallback reads of excluded phases) is the
+    ``dt=ds`` partition alone (`sinks.read_day`): its files are the
+    day's files, whatever other days the warehouse holds, and a
+    writer's read-back passes the schema it just wrote, so no
+    inference job runs. ``enrich_tokens`` (not dt-partitioned) is the
+    whole table. ``verify`` runs its five checks as one action
+    (`operators.verify`). ``extract_token_transfers`` is an eager local
+    checkpoint: the call leaves nothing in the session's cache.
     """
     cfg: ChainConfig = CHAINS.get(chain, ETHEREUM)
 
@@ -173,7 +202,7 @@ def run_evm_day(
         read what it wrote instead."""
         if task in ctx:
             return ctx[task]
-        return spark.read.parquet(_wh(table))
+        return sinks.read_day(spark, _wh(table), ds)
 
     def _load(table: str):
         def fn(ctx):
@@ -190,7 +219,8 @@ def run_evm_day(
 
     def _write(df, table, extra=None):
         sinks.write_partitioned(df, "", ds, extra, path=_wh(table))
-        return spark.read.parquet(_wh(table))
+        schema = sinks.partitioned_schema(df, extra)
+        return sinks.read_day(spark, _wh(table), ds, schema)
 
     p.add(
         "enrich_blocks",
@@ -261,8 +291,10 @@ def run_evm_day(
     )
 
     def _tokens(c):
+        # not dt-partitioned: the read-back is the whole table
         sinks.append_dedup(c["load_tokens"], "", path=_wh("tokens"))
-        return spark.read.parquet(_wh("tokens"))
+        schema = c["load_tokens"].schema
+        return spark.read.schema(schema).parquet(_wh("tokens"))
 
     p.add("enrich_tokens", _tokens, deps=["load_tokens"])
 
@@ -276,27 +308,15 @@ def run_evm_day(
         )
 
     # verify phase (reference blockchain.py:115-126; retries=0 semantics)
+    # — all five checks in one action
     def _verify(c):
-        out = {
-            "blocks": verify.verify_have_latest(
-                _g(c, "enrich_blocks", "blocks"), ds, "blocks"
-            ),
-            "transactions": verify.verify_have_latest(
-                _g(c, "enrich_transactions", "transactions"), ds,
-                "transactions",
-            ),
-            "logs": verify.verify_have_latest(
-                _g(c, "enrich_logs", "logs"), ds, "logs"
-            ),
-            "traces": verify.verify_have_latest(
-                _g(c, "enrich_traces", "traces"), ds, "traces"
-            ),
-            "root_traces": verify.verify_root_traces_match_transactions(
-                _g(c, "enrich_traces", "traces"),
-                _g(c, "enrich_transactions", "transactions"), ds,
-            ),
+        latest = {
+            t: _g(c, f"enrich_{t}", t)
+            for t in ("blocks", "transactions", "logs", "traces")
         }
-        return out
+        return verify._verify_day(
+            ds, latest, latest["traces"], latest["transactions"]
+        )
 
     p.add(
         "verify",
@@ -312,18 +332,19 @@ def run_evm_day(
 
         def _parse(c, el=el):
             out = decode_log_events(_g(c, "enrich_logs", "logs"), el)
-            sinks.write_partitioned(out, "", ds, path=_wh(f"evt_{el.name}"))
-            return spark.read.parquet(_wh(f"evt_{el.name}"))
+            return _write(out, f"evt_{el.name}")
 
         p.add(name, _parse, deps=["enrich_logs"])
 
     # D-4 token-transfer extraction runs off raw logs (export-side in
     # the reference, python.py:194-212). Must materialize before any
-    # clean task may delete the staging file underneath it.
+    # clean task may delete the staging file underneath it. An eager
+    # local checkpoint materializes it without registering a cached
+    # plan: its blocks go when the caller drops the result.
     def _extract(c):
-        df = extract_token_transfers(c["load_logs"]).cache()
-        df.count()  # materialize while the staging file still exists
-        return df
+        return extract_token_transfers(c["load_logs"]).localCheckpoint(
+            eager=True
+        )
 
     p.add("extract_token_transfers", _extract, deps=["load_logs"])
 

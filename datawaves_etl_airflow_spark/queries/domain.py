@@ -26,6 +26,7 @@ from ..operators.decode import (
     extract_token_transfers,
 )
 from ..operators.prices import fill_price_minutes
+from ..operators.verify import _root_traces
 from ..schemas.abi import AbiElement
 from ..schemas.staging import STAGING_SCHEMAS, staging_schema
 from ..sources.staging import read_staging
@@ -207,12 +208,8 @@ def d_verify_root_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-2/P-5 plan: #root traces (null-skipping count) vs #transactions."""
     traces = _staged(spark, "traces")
     txs = _staged(spark, "transactions")
-    n_root = (
-        traces.filter(
-            (F.col("trace_address") == "[]")
-            & F.col("transaction_hash").isNotNull()
-        )
-        .agg(F.count("transaction_hash").alias("n_root"))
+    n_root = _root_traces(traces).agg(
+        F.count("transaction_hash").alias("n_root")
     )
     n_tx = txs.agg(F.count(F.lit(1)).alias("n_tx"))
     return n_root.crossJoin(n_tx)

@@ -203,6 +203,24 @@ class TestExtraction:
         assert out[0]["from_address"] == ADDR_A
         assert out[0]["value"] == Decimal(99)
 
+    def test_truncated_word_is_null_in_both_decoders(self, spark):
+        """One Transfer log with a 16-byte data field: D-1 rejects it
+        as malformed, and D-4 follows the same rule."""
+        topics = [TRANSFER_TOPIC0, _word_addr(ADDR_A), _word_addr(ADDR_B)]
+        data = "0x" + format(99, "032x")  # 16 bytes, half a word
+        d1 = decode_log_events(
+            _enriched_logs(spark, [(topics, data, "0xtoken")]), TRANSFER_EVENT
+        ).collect()
+        raw = spark.createDataFrame(
+            [(0, "0xt0", 0, "0xb", 100, "0xtoken", data, ",".join(topics))],
+            ["log_index", "transaction_hash", "transaction_index",
+             "block_hash", "block_number", "address", "data", "topics"],
+        )
+        d4 = extract_token_transfers(raw).collect()
+        assert len(d1) == len(d4) == 1
+        assert d1[0]["value"] is None
+        assert d4[0]["value"] is None
+
     def test_extract_contracts_erc20(self, spark):
         erc20_sels = ["18160ddd", "70a08231", "a9059cbb", "23b872dd",
                       "095ea7b3", "dd62ed3e"]

@@ -151,6 +151,28 @@ class TestSinks:
         )
         assert spark.table("default.sink_b").count() == 2
 
+    def test_read_day_is_the_day_with_the_written_schema(self, spark, tmp_path):
+        """read_day over a two-day table: the day's rows and files
+        only, and the known schema is what inference reads back."""
+        path = str(tmp_path / "t")
+        # an int bucket, as the hash buckets are (inference guesses a
+        # partition column's type from its directory names); the old
+        # dt column is replaced by the written day
+        df = spark.createDataFrame(
+            [(1, "a", 3, 0), (2, None, 7, 1)], ["k", "v", "bucket", "dt"]
+        ).withColumn("bucket", F.col("bucket").cast("int"))
+        for ds in ("2024-01-01", "2024-01-02"):
+            sinks.write_partitioned(df, "", ds, ["bucket"], path=path)
+        schema = sinks.partitioned_schema(df, ["bucket"])
+        assert schema == spark.read.parquet(path).schema
+        day = sinks.read_day(spark, path, "2024-01-02", schema)
+        assert day.schema == schema
+        assert {(r["k"], str(r["dt"]), r["bucket"]) for r in day.collect()} == {
+            (1, "2024-01-02", 3), (2, "2024-01-02", 7)
+        }
+        assert all("/dt=2024-01-02/" in f for f in day.inputFiles())
+        assert sinks.read_day(spark, path, "2024-01-03").collect() == []
+
     def test_append_dedup_path(self, spark, tmp_path):
         path = str(tmp_path / "tokens")
         a = spark.createDataFrame([("0xa", "A")], ["address", "symbol"])
@@ -362,6 +384,28 @@ class TestVerify:
         txs3 = self._dated(spark, 3, "2024-01-01")
         with pytest.raises(VerificationError):
             verify_root_traces_match_transactions(traces, txs3, "2024-01-01")
+
+    def test_each_check_is_one_collect(self, spark, monkeypatch):
+        traces = spark.createDataFrame(
+            [("[]", "0xt1"), ("[]", "0xt2")],
+            ["trace_address", "transaction_hash"],
+        ).withColumn("dt", F.lit("2024-01-01").cast("date"))
+        txs = self._dated(spark, 2, "2024-01-01")
+        cls = type(txs)
+        calls = []
+        collect = cls.collect
+
+        def counting(self):
+            calls.append(1)
+            return collect(self)
+
+        monkeypatch.setattr(cls, "collect", counting)
+        assert verify_have_latest(txs, "2024-01-01") == 2
+        assert len(calls) == 1
+        assert verify_root_traces_match_transactions(
+            traces, txs, "2024-01-01"
+        ) == 2
+        assert len(calls) == 2
 
 
 class TestPricesOps:

@@ -162,6 +162,93 @@ class TestEndToEndDay:
         assert again["enrich_tokens"].count() == 15
 
 
+class TestDayScope:
+    """One day run over a warehouse that already holds earlier days
+    (copies of the fixture day's partitions under other dt values):
+    the day's read-backs, its verify action, what it leaves cached,
+    and the job group its pool tasks run under."""
+
+    EARLIER = ("2024-01-13", "2024-01-14")
+    GROUP = "evm-day-scope"
+    #: jobs of this re-run fixture day with one decoded event (CHANGES.md)
+    MAX_JOBS = 24
+
+    @pytest.fixture(scope="class")
+    def day(self, spark, tmp_path_factory):
+        import shutil
+
+        base = fx.ensure_fixtures()
+        wh = str(tmp_path_factory.mktemp("wh_history"))
+        run_evm_day(spark, base, wh, fx.DS, phases={"load", "enrich"})
+        root = os.path.join(wh, "ethereum")
+        for table in os.listdir(root):
+            part = os.path.join(root, table, f"dt={fx.DS}")
+            for ds in self.EARLIER if os.path.isdir(part) else ():
+                shutil.copytree(part, os.path.join(root, table, f"dt={ds}"))
+        spark.catalog.clearCache()
+        sc = spark.sparkContext
+        sc.setJobGroup(self.GROUP, "one evm day")
+        try:
+            ctx = run_evm_day(
+                spark, base, wh, fx.DS, decode_events=[TRANSFER_EVENT]
+            )
+            cache = spark._jsparkSession.sharedState().cacheManager()
+            left_cached = not cache.isEmpty()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return ctx, wh, left_cached
+
+    def test_parse_decodes_only_the_day(self, day, spark):
+        from pyspark.sql import functions as F
+
+        _, wh, _ = day
+        evt = spark.read.parquet(os.path.join(wh, "ethereum", "evt_Transfer"))
+        # 100 = the single-day count (TestEndToEndDay.test_decoded_table)
+        assert evt.filter(F.col("dt") == F.lit(fx.DS).cast("date")).count() == 100
+
+    def test_read_backs_touch_only_the_day(self, day):
+        ctx, _, _ = day
+        for task in ("enrich_logs", "parse_evt_Transfer"):
+            files = ctx[task].inputFiles()
+            assert files
+            assert all(f"/dt={fx.DS}/" in f for f in files), task
+
+    def test_verify_is_one_action(self, day, spark, monkeypatch):
+        _, wh, _ = day
+        base = fx.ensure_fixtures()
+        cls = type(spark.range(1))
+        calls = []
+        collect = cls.collect
+
+        def counting(self):
+            calls.append(1)
+            return collect(self)
+
+        monkeypatch.setattr(cls, "collect", counting)
+        got = run_evm_day(spark, base, wh, fx.DS, phases={"verify"})
+        assert got["verify"]["root_traces"] == 200
+        assert len(calls) == 1
+
+    def test_verify_phase_without_the_day_raises(self, day, spark):
+        from datawaves_etl_airflow_spark.operators.verify import (
+            VerificationError,
+        )
+
+        _, wh, _ = day
+        with pytest.raises(VerificationError, match="no latest blocks"):
+            run_evm_day(spark, fx.ensure_fixtures(), wh, "2024-01-10",
+                        phases={"verify"})
+
+    def test_leaves_nothing_cached(self, day):
+        _, _, left_cached = day
+        assert not left_cached
+
+    def test_pool_jobs_carry_the_callers_group(self, day, spark):
+        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(self.GROUP)
+        assert 0 < len(ids) <= self.MAX_JOBS
+
+
 class TestPolygonChain:
     def test_geth_trace_pipeline(self, spark, tmp_path):
         """polygon config: traces come from geth exports without tx

@@ -105,6 +105,25 @@ class TestDecodedTableTransfer:
         assert got.filter(F.col("dt") == F.lit(other).cast("date")).count() == 2
         assert got.count() == 8
 
+    def test_row_count_comes_from_the_write(self, spark, tmp_path,
+                                            monkeypatch):
+        """The copied row count is observed on the write: no count()
+        job, from a path source (day partition, missing day) or a
+        DataFrame source."""
+        decoded = _decoded_transfers(spark)
+        wh = str(tmp_path / "wh" / "t")
+        write_partitioned(decoded, "", DS, path=wh)
+        frame = spark.read.parquet(wh)
+
+        def no_count(self):
+            raise AssertionError("transfer_partition called count()")
+
+        monkeypatch.setattr(type(frame), "count", no_count)
+        client = TransferTarget("path", str(tmp_path / "client"))
+        assert transfer_partition(spark, wh, client, "t", DS) == 6
+        assert transfer_partition(spark, frame, client, "u", DS) == 6
+        assert transfer_partition(spark, wh, client, "t", "2023-11-15") == 0
+
     def test_jdbc_target_builds_writer_contract(self, spark, monkeypatch):
         """No JDBC endpoint exists in the sandbox; pin the contract —
         url, dbtable, options, append mode — by intercepting the final
@@ -135,6 +154,11 @@ class TestDecodedTableTransfer:
                     mode=self.saved_mode, fmt=self.fmt, **self.opts
                 )
 
+        class FakeObservation:
+            # a real Observation's get blocks until an action fills it;
+            # the fake save is the action, so the fake reads 3 at once
+            get = {"n": 3}
+
         class FakeDF:
             def __init__(self):
                 self.write = FakeWriter()
@@ -142,8 +166,12 @@ class TestDecodedTableTransfer:
             def filter(self, *a, **k):
                 return self
 
+            def observe(self, observation, *exprs):
+                assert isinstance(observation, FakeObservation)
+                return self
+
             def count(self):
-                return 3
+                raise AssertionError("the row count comes from the write")
 
         fake = FakeDF()
         # transfer_partition type-dispatches on DataFrame; let the fake
@@ -151,6 +179,7 @@ class TestDecodedTableTransfer:
         from pyspark.sql import DataFrame as RealDF
 
         monkeypatch.setattr(tr, "DataFrame", (RealDF, FakeDF))
+        monkeypatch.setattr(tr, "Observation", FakeObservation)
         target = TransferTarget(
             "jdbc",
             "jdbc:databricks://host:443/default",
@@ -164,3 +193,36 @@ class TestDecodedTableTransfer:
         assert captured["dbtable"] == "erc20_transfer"
         assert captured["user"] == "client"
         assert captured["password"] == "secret"
+
+    def test_jdbc_target_counts_from_the_write(self, spark, tmp_path,
+                                               monkeypatch):
+        """A real JDBC write (embedded in-memory Derby, the driver Spark
+        ships for its metastore): the returned count is observed on the
+        JDBC save itself, with count() forbidden."""
+        import uuid
+
+        derby = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+        try:
+            spark._jvm.java.lang.Class.forName(derby)
+        except Exception:
+            pytest.skip("no Derby JDBC driver on the classpath")
+        src = spark.createDataFrame(
+            [(0, DS), (1, DS), (2, DS), (3, "2023-11-15"), (4, "2023-11-15")],
+            "id long, dt string",
+        ).withColumn("dt", F.col("dt").cast("date"))
+        wh = str(tmp_path / "wh")
+        src.write.partitionBy("dt").parquet(wh)
+        url = f"jdbc:derby:memory:t{uuid.uuid4().hex};create=true"
+        target = TransferTarget("jdbc", url, (("driver", derby),))
+
+        def no_count(self):
+            raise AssertionError("transfer_partition called count()")
+
+        monkeypatch.setattr(type(src), "count", no_count)
+        assert transfer_partition(spark, wh, target, "day_rows", DS) == 3
+        got = (
+            spark.read.format("jdbc").option("url", url)
+            .option("dbtable", "day_rows").option("driver", derby)
+            .load().collect()
+        )
+        assert sorted(r["id"] for r in got) == [0, 1, 2]
